@@ -1,12 +1,12 @@
 """Round-6 optimization measurement harness (bench.py is FROZEN for
 driver measurement; this file holds the extra instrumentation the
-optimization round needs — per-query timing with plan capture, noop-sink
-isolation, and a per-phase linkage-pipeline profile).
+optimization round needs — per-query timing with plan capture and
+noop-sink isolation). Per-phase linkage profiles come from
+``python3 linkbench/run.py --workload batch_link --trace 1``.
 
 Usage:
   python bench_extra.py queries [name ...]   # time headline queries (count, like bench.py)
   python bench_extra.py plans  [name ...]    # write .explain("formatted") to plans/r06/
-  python bench_extra.py phases               # per-phase linkage pipeline profile
 """
 
 from __future__ import annotations
@@ -74,149 +74,6 @@ def dump_plans(names, suffix="before"):
     spark.stop()
 
 
-def profile_phases(n_docs=20000, n_gaz=4000):
-    """Per-phase wall profile of run_pipeline on the bench linkage
-    corpus: times each materialization boundary separately."""
-    import shutil
-    from ehdc_llpg_address_matching_spark.synth import SynthConfig, write_parquet
-    tmp = f"/tmp/bench_corpus_{n_docs}_{n_gaz}"
-    if not os.path.exists(os.path.join(tmp, "_CORPUS_OK")):
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp, exist_ok=True)
-        write_parquet(tmp, SynthConfig(seed=42, n_gazetteer=n_gaz,
-                                       n_docs=n_docs))
-        open(os.path.join(tmp, "_CORPUS_OK"), "w").close()
-    spark = _make_spark("bench-extra-phases")
-    docs = spark.read.parquet(os.path.join(tmp, "documents.parquet"))
-    gaz = spark.read.parquet(os.path.join(tmp, "gazetteer.parquet"))
-
-    from ehdc_llpg_address_matching_spark.pipeline import (PipelineConfig,
-                                                           run_pipeline)
-    # warm run
-    t0 = time.time()
-    out = run_pipeline(spark, docs, gaz, PipelineConfig())
-    out["matches"].count()
-    print(json.dumps({"warm_full_sec": round(time.time() - t0, 2)}),
-          flush=True)
-    out = None
-    import gc
-    gc.collect()
-    spark.catalog.clearCache()
-    try:
-        spark.sparkContext._jvm.System.gc()
-        time.sleep(2)
-    except Exception:
-        pass
-
-    # instrumented run: force materialization at phase boundaries
-    from ehdc_llpg_address_matching_spark.functions.symspell import \
-        build_dictionary_from_gazetteer
-    from ehdc_llpg_address_matching_spark.operators import candidates as C
-    from ehdc_llpg_address_matching_spark.operators import decision as D
-    from ehdc_llpg_address_matching_spark.operators import scoring as S
-    from ehdc_llpg_address_matching_spark.operators.blocking import \
-        with_blocking_keys
-    from ehdc_llpg_address_matching_spark.pipeline import normalize_documents
-    from pyspark.sql import functions as F
-
-    times = {}
-
-    def mark(name, t0):
-        times[name] = round(time.time() - t0, 2)
-        print(json.dumps({name: times[name]}), flush=True)
-        return time.time()
-
-    t = time.time()
-    gazp = C.prepare_gazetteer(gaz).cache()
-    gazp.count()
-    t = mark("gazetteer_prep", t)
-    sym = build_dictionary_from_gazetteer(gazp, addr_col="addr_core")
-    t = mark("symspell_build", t)
-    docs_n = normalize_documents(docs, sym).cache()
-    docs_n.count()
-    t = mark("normalize_docs", t)
-    uaddr = with_blocking_keys(C.prepare_unique_addresses(docs_n)).cache()
-    uaddr.count()
-    t = mark("unique_addresses", t)
-    gens = [
-        C.cand_exact_canonical(uaddr, gazp),
-        C.cand_blocked(uaddr, gazp),
-        C.cand_rule_rewrite(uaddr, gazp),
-        C.cand_component_joins(uaddr, gazp),
-        C.cand_spatial(uaddr, gazp),
-        C.cand_hierarchical(uaddr, gazp),
-    ]
-    cands = C.union_candidates(*gens).localCheckpoint(eager=True)
-    t = mark("candidates_union", t)
-    pairs = S.attach_pair_attrs(cands, uaddr, gazp)
-    pairs = S.with_column_features(pairs)
-    pairs = S.prefilter_pairs(pairs)
-    pairs = S.with_pair_features(pairs)
-    pairs = S.with_score(pairs)
-    best = D.keep_best_per_uprn(D.narrow_for_decision(pairs))
-    decided = S.with_audit_levenshtein(
-        D.decide(best, PipelineConfig().thresholds, top_k=10)) \
-        .localCheckpoint(eager=True)
-    t = mark("score_decide", t)
-    acc = D.accepted(decided)
-    addr_match = acc.select("addr_id", "uprn", "score", "confidence",
-                            F.array_join("methods", "+").alias("method"))
-    doc_addr = docs_n.join(
-        uaddr.select("addr_can", "postcode", "addr_id"),
-        ["addr_can", "postcode"], "left")
-    fuzzy_doc = (doc_addr
-                 .join(addr_match, "addr_id", "inner")
-                 .select("doc_id", "uprn", "method", "score", "confidence"))
-    legacy = C.legacy_uprn_matches(docs_n, gazp) \
-        .withColumn("confidence", F.lit(1.0))
-    missing = C.missing_legacy_uprns(docs_n, gazp) \
-        .localCheckpoint(eager=True)
-    historic = C.historic_uprn_matches(docs_n, gazp, missing=missing) \
-        .withColumn("confidence", F.lit(1.0))
-    from pyspark.sql import Window
-    both = (legacy.withColumn("_prio", F.lit(0))
-            .unionByName(historic.withColumn("_prio", F.lit(0)))
-            .unionByName(fuzzy_doc.withColumn("_prio", F.lit(1))))
-    wd = Window.partitionBy("doc_id").orderBy(
-        F.asc("_prio"), F.desc("confidence"), F.desc("score"),
-        F.asc("uprn"))
-    doc_matches = (both.withColumn("_rn", F.row_number().over(wd))
-                   .filter(F.col("_rn") == 1).drop("_rn", "_prio")) \
-        .localCheckpoint(eager=True)
-    t = mark("fanout_precedence", t)
-    from ehdc_llpg_address_matching_spark.operators.cluster import (
-        build_edges, canonical_uprn_per_cluster, cluster_consensus,
-        connected_components)
-    edges = build_edges(doc_matches, docs_n)
-    comps = connected_components(edges)
-    t = mark("connected_components", t)
-    consensus = cluster_consensus(comps, doc_matches, docs_n)
-    from ehdc_llpg_address_matching_spark.operators.rescue import \
-        group_fuzzy_rescue
-    rescue = group_fuzzy_rescue(docs_n, doc_matches, gazp)
-    matches = doc_matches.unionByName(
-        consensus.withColumn("score", F.col("confidence")),
-        allowMissingColumns=True).unionByName(
-        rescue.withColumn("score", F.col("confidence")),
-        allowMissingColumns=True)
-    matches = (matches
-               .groupBy("doc_id")
-               .agg(F.min_by(
-                   F.struct("uprn", "method", "score", "confidence"),
-                   F.struct((-F.coalesce("confidence",
-                                         F.lit(0.0))).alias("_c"),
-                            (-F.coalesce("score", F.lit(0.0))).alias("_s"),
-                            F.col("uprn").alias("_u"))).alias("_m"))
-               .select("doc_id", "_m.*"))
-    n = matches.count()
-    t = mark("consensus_rescue_final", t)
-    times["_n_matches"] = n
-    print(json.dumps({"phases": times,
-                      "total": round(sum(v for k, v in times.items()
-                                         if not k.startswith("_")), 2)}))
-    spark.stop()
-
-
 if __name__ == "__main__":
     cmd = sys.argv[1] if len(sys.argv) > 1 else "queries"
     names = sys.argv[2:] or BENCH_QUERIES
@@ -226,5 +83,3 @@ if __name__ == "__main__":
         dump_plans(names)
     elif cmd == "plans-after":
         dump_plans(names, suffix="after")
-    elif cmd == "phases":
-        profile_phases()

@@ -7,16 +7,23 @@ documents -> span extraction -> canonicalize -> components -> SymSpell
 fan-out to documents ∪ legacy-UPRN direct matches -> connected
 components -> cluster consensus -> matches / audit / metrics.
 
-Each phase's output can be checkpointed to a Warehouse (Iceberg
-snapshot / parquet manifest) for resume — the Spark analog of the
-reference's layer snapshots (cmd/matcher-v2/main.go:3389-3421).
+The DAG is written once, as the six phase functions in ``PHASES``.
+Each takes the frames built so far plus the config and passes every
+frame it may materialize through ``keep(name, df)``; the materializer
+decides what that means. ``InMemory`` (``run_pipeline``) caches or
+localCheckpoints; ``plans.phases.WarehouseMaterializer``
+(``run_phased``) saves phase tables with lineage, reads them back and
+commits the phase, so a crashed run resumes (the reference's layer
+snapshots, cmd/matcher-v2/main.go:3389-3421). Both runners honor every
+cfg switch by construction.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .functions.normalize import with_normalized
 from .functions.symspell import SymSpell, build_dictionary_from_gazetteer
@@ -85,33 +92,10 @@ def normalize_documents(docs: DataFrame, symspell: SymSpell | None) -> DataFrame
                            symspell=symspell)
 
 
-def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
-                 cfg: PipelineConfig | None = None,
-                 gazp_prepared: DataFrame | None = None) -> dict[str, DataFrame]:
-    """gazp_prepared: an already-prepared (prepare_gazetteer) frame —
-    callers that run the pipeline repeatedly over the same gazetteer
-    (streaming foreachBatch, threshold sweeps) prepare + persist it
-    ONCE and pass it here instead of paying normalization + range
-    expansion per run."""
-    cfg = cfg or PipelineConfig()
-
-    # --- phase: gazetteer prep (original ∪ range-expanded, keys, cache)
-    if gazp_prepared is not None:
-        gazp = gazp_prepared
-    else:
-        gazp = C.prepare_gazetteer(gaz)
-        gazp = gazp.cache()
-
-    # --- phase: document normalization (+ SymSpell vs gazetteer vocab)
-    sym = build_dictionary_from_gazetteer(gazp, addr_col="addr_core") \
-        if cfg.enable_symspell else None
-    docs_n = normalize_documents(docs, sym).cache()
-
-    # --- phase: dedup to unique addresses (J11) + blocking keys
-    uaddr = C.prepare_unique_addresses(docs_n)
-    uaddr = with_blocking_keys(uaddr).cache()
-
-    # --- phase: candidate union
+def generators(cfg: PipelineConfig, uaddr: DataFrame,
+               gazp: DataFrame) -> list[DataFrame]:
+    """The p3 candidate generators ``cfg`` switches on; the J5
+    hierarchical cascade last."""
     gens = [
         C.cand_exact_canonical(uaddr, gazp),
         C.cand_blocked(uaddr, gazp, hot_threshold=cfg.hot_key_threshold,
@@ -121,7 +105,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
     ]
     if cfg.enable_spatial:
         gens.append(C.cand_spatial(uaddr, gazp, radius_m=cfg.spatial_radius_m))
-    if cfg.enable_vector and "embedding" in gaz.columns:
+    if cfg.enable_vector and "embedding" in gazp.columns:
         if cfg.vector_mode == "ivf":
             gens.append(C.cand_vector_ivf(uaddr, gazp,
                                           top_k=cfg.vector_top_k,
@@ -133,83 +117,106 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
                                       top_k=cfg.vector_top_k,
                                       min_sim=cfg.vector_min_sim))
     gens.append(C.cand_hierarchical(uaddr, gazp))
-    # eager localCheckpoint, not cache: the union of 7 generators (each
-    # a join tree over uaddr/gazp) is a LARGE logical plan, and every
-    # downstream action re-ANALYZES it even when execution hits the
-    # cache — checkpointing materializes the (small) candidate set and
-    # truncates the plan, the same cut the warehouse snapshot makes
-    # between phases at scale (plans/phases.py)
-    cands = C.union_candidates(*gens).localCheckpoint(eager=True)
+    return gens
 
-    # --- phase: pair scoring (cheap column features -> JVM prefilter ->
-    #     Arrow string-sim UDF -> weighted score). The checkpointed
-    #     candidate set materializes AQE-coalesced (17 partitions at the
-    #     bench corpus), so the expensive fused prefilter+Arrow stage ran
-    #     17 tasks on 32 cores; spread_for_udf re-spreads it to the
-    #     session parallelism (no-op whenever the candidate set already
-    #     has >= cluster-cores partitions, i.e. at real scale). The
-    #     exposed "candidates" output stays the un-spread checkpoint.
+
+# --------------------------------------------------------------- phases
+def p1_gazetteer(f, cfg, keep):
+    """Gazetteer prep: original ∪ range-expanded, parsed, keyed."""
+    return {"gazetteer_prepared":
+            keep("gazetteer_prepared", C.prepare_gazetteer(f["gaz"]))}
+
+
+def p2_normalize(f, cfg, keep):
+    """Document normalization (+ SymSpell vs the gazetteer vocabulary),
+    then dedup to unique addresses (J11) with blocking keys."""
+    gazp = f["gazetteer_prepared"]
+    sym = build_dictionary_from_gazetteer(gazp, addr_col="addr_core") \
+        if cfg.enable_symspell else None
+    docs_n = keep("docs_normalized", normalize_documents(f["docs"], sym))
+    uaddr = keep("unique_addresses",
+                 with_blocking_keys(C.prepare_unique_addresses(docs_n)))
+    return {"docs_normalized": docs_n, "unique_addresses": uaddr}
+
+
+def p3_candidates(f, cfg, keep):
+    gens = generators(cfg, f["unique_addresses"], f["gazetteer_prepared"])
+    return {"candidates": keep("candidates", C.union_candidates(*gens))}
+
+
+def _tune(f, best, thresholds):
+    """A5/§5.4 tuner in the loop (reference threshold_tuner.go:
+    246-271): sweep the accept threshold over the scored top-1
+    candidates against legacy-UPRN pseudo-gold; adopt the best-F1
+    threshold meeting the precision floor. Returns (thresholds, sweep)."""
+    from .operators.audit import tune_thresholds
+    docs_n, gazp = f["docs_normalized"], f["gazetteer_prepared"]
+    gold = (C.legacy_uprn_matches(docs_n, gazp)
+            .join(docs_n.select("doc_id", "addr_can", "postcode"),
+                  "doc_id")
+            .select(F.sha2(F.concat_ws("|", "addr_can", "postcode"),
+                           256).alias("addr_id"), "uprn")
+            .distinct())
+    tuned = tune_thresholds(D.decide(best, thresholds, top_k=1), gold)
+    tau = tuned["best"]["threshold"]
+    # clamp the WHOLE ladder (high >= medium >= review >= minimum):
+    # decide() rejects score < minimum first, so a tau below the floor
+    # would otherwise be silently floored and misreported
+    medium = min(tau, thresholds.medium)
+    used = D.Thresholds(high=tau, medium=medium,
+                        review=min(thresholds.review, medium),
+                        minimum=min(thresholds.minimum, tau),
+                        winner_margin=thresholds.winner_margin)
+    sweep = best.sparkSession.createDataFrame(
+        [(float(o["threshold"]), int(o["tp"]), int(o["fp"]),
+          int(o["fn"]), float(o["precision"]), float(o["recall"]),
+          float(o["f1"])) for o in tuned["sweep"]],
+        "threshold double, tp long, fp long, fn long, "
+        "precision double, recall double, f1 double")
+    return used, sweep
+
+
+def p4_scoring(f, cfg, keep):
+    """Pair scoring (column features -> JVM prefilter -> Arrow
+    string-sim UDF -> weighted score), keep-best, tiered decision.
+    spread_for_udf re-spreads the AQE-coalesced candidate set over the
+    session's cores for the Arrow stage (a no-op at real scale). The
+    decision runs on NARROW columns; d_core/g_core ride DECISION_COLS so
+    the audit Levenshtein needs no second attach join."""
     from .session import spread_for_udf
-    pairs = S.attach_pair_attrs(spread_for_udf(cands), uaddr, gazp)
+    uaddr, gazp = f["unique_addresses"], f["gazetteer_prepared"]
+    pairs = S.attach_pair_attrs(spread_for_udf(f["candidates"]), uaddr, gazp)
     pairs = S.with_column_features(pairs)
     pairs = S.prefilter_pairs(pairs)
     pairs = S.with_pair_features(pairs)
     pairs = S.with_score(pairs, scorer=cfg.scorer)
-
-    # --- phase: decision on NARROW columns (the wide pair payload must
-    #     not ride through the two window shuffles). d_core/g_core ride
-    #     along in DECISION_COLS so the audit-only Levenshtein needs no
-    #     second attach join (round-2 re-executed the uaddr x gazp join
-    #     just to fetch the strings).
-    best = D.keep_best_per_uprn(D.narrow_for_decision(pairs))
+    # scored keep-best pairs (pre-decide): the decision's exact input,
+    # kept so audits / a resumed run / the linkage_fuzzy oracle can
+    # replay decide() without re-running the Arrow scoring UDF
+    best = keep("scored_pairs", D.keep_best_per_uprn(D.narrow_for_decision(pairs)))
+    out = {"scored_pairs": best}
     thresholds = cfg.thresholds
     if cfg.auto_tune:
-        # A5/§5.4 tuner in the loop (reference threshold_tuner.go:
-        # 246-271): legacy-UPRN-validated docs are trusted pseudo-gold;
-        # sweep the accept threshold over the scored top-1 candidates
-        # and adopt the best-F1 threshold meeting the precision floor.
-        # `best` is checkpointed first so the probe decision pass and
-        # the real one share the materialized scored pairs instead of
-        # re-running candidate generation + the Arrow UDF twice.
-        from .operators.audit import tune_thresholds
-        best = best.localCheckpoint(eager=True)
-        gold = (C.legacy_uprn_matches(docs_n, gazp)
-                .join(docs_n.select("doc_id", "addr_can", "postcode"),
-                      "doc_id")
-                .select(F.sha2(F.concat_ws("|", "addr_can", "postcode"),
-                               256).alias("addr_id"), "uprn")
-                .distinct())
-        probe = D.decide(best, thresholds, top_k=1)
-        tuned = tune_thresholds(probe, gold)
-        tau = tuned["best"]["threshold"]
-        # clamp the WHOLE ladder so the band order stays
-        # high >= medium >= review >= minimum after adoption: decide()
-        # rejects score < minimum first, so a tau below the default
-        # floor (DEFAULT_SWEEP reaches 0.50) would otherwise be
-        # silently floored and thresholds_used would misreport the
-        # actual accept behavior (round-4 advice)
-        medium = min(tau, thresholds.medium)
-        thresholds = D.Thresholds(
-            high=tau, medium=medium,
-            review=min(thresholds.review, medium),
-            minimum=min(thresholds.minimum, tau),
-            winner_margin=thresholds.winner_margin)
-    decided_narrow = D.decide(best, thresholds, top_k=cfg.top_k_audit) \
-        .localCheckpoint(eager=True)
-    # audit-only Levenshtein (F3) stays LAZY, layered over the
-    # checkpointed decision table: the matches path never reads `lev`,
-    # and computing the batch DP eagerly inside the checkpoint cost ~5 s
-    # per run at the bench corpus (round-6 noop profile) for a column
-    # only the audit consumers materialize. Consumers of
-    # audit_candidates get identical values — the DP now just runs when
-    # the audit frame is actually used (guide §1.2: don't compute what
-    # the action doesn't need).
-    decided = S.with_audit_levenshtein(decided_narrow)
-    acc = D.accepted(decided_narrow)
+        thresholds, out["tuning"] = _tune(f, best, thresholds)
+        out["thresholds_used"] = thresholds
+    decisions = keep("decisions",
+                     D.decide(best, thresholds, top_k=cfg.top_k_audit))
+    # the audit-only Levenshtein (F3) stays off the matches path: it
+    # runs only when the audit table is materialized
+    out["decisions"] = decisions
+    out["audit_candidates"] = keep("audit_candidates",
+                                   S.with_audit_levenshtein(decisions))
+    return out
 
-    # --- phase: fan-out to documents + legacy-UPRN overrides
-    addr_match = acc.select("addr_id", "uprn", "score", "confidence",
-                            F.array_join("methods", "+").alias("method"))
+
+def p5_matches(f, cfg, keep):
+    """Fan-out of accepted address winners to documents, with the
+    legacy/historic UPRN-validated matches taking precedence."""
+    docs_n, uaddr, gazp = (f["docs_normalized"], f["unique_addresses"],
+                           f["gazetteer_prepared"])
+    addr_match = D.accepted(f["decisions"]).select(
+        "addr_id", "uprn", "score", "confidence",
+        F.array_join("methods", "+").alias("method"))
     doc_addr = docs_n.join(
         uaddr.select("addr_can", "postcode", "addr_id"),
         ["addr_can", "postcode"], "left")
@@ -220,22 +227,15 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
         .withColumn("confidence", F.lit(1.0))
     # historic-UPRN creation: valid legacy UPRNs ABSENT from the LLPG
     # spawn historic gazetteer records and auto-accept (the reference's
-    # largest correction bucket — cmd/bulk-historic-uprns). Disjoint
-    # from `legacy` by construction (in-gaz vs not-in-gaz). The
-    # missing-UPRN set is materialized ONCE and feeds both the match
-    # path and the appendable historic_gazetteer output — the
-    # gazetteer-UPRN distinct + anti-join (the expensive part at 10^8
-    # gazetteer rows) must not re-execute per consumer.
-    missing = C.missing_legacy_uprns(docs_n, gazp) \
-        .localCheckpoint(eager=True)
+    # largest correction bucket — cmd/bulk-historic-uprns); disjoint
+    # from `legacy` by construction
+    missing = keep("missing_legacy_uprns",
+                   C.missing_legacy_uprns(docs_n, gazp))
     historic = C.historic_uprn_matches(docs_n, gazp, missing=missing) \
         .withColumn("confidence", F.lit(1.0))
-    # legacy/historic win where both exist (reference precedence:
-    # ADDRESS_MATCHING_PROCESS.md:66-72 — deterministic beats fuzzy).
-    # Explicit priority column, NOT confidence ordering: a perfect
-    # fuzzy match also reaches confidence 1.0 and would then beat the
-    # UPRN-validated match on the uprn tie-break.
-    from pyspark.sql import Window
+    # legacy/historic beat fuzzy (ADDRESS_MATCHING_PROCESS.md:66-72) by
+    # an explicit priority, not confidence: a perfect fuzzy match also
+    # reaches 1.0 and could win the uprn tie-break
     both = (legacy.withColumn("_prio", F.lit(0))
             .unionByName(historic.withColumn("_prio", F.lit(0)))
             .unionByName(fuzzy_doc.withColumn("_prio", F.lit(1))))
@@ -243,14 +243,24 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
         F.asc("_prio"), F.desc("confidence"), F.desc("score"),
         F.asc("uprn"))
     doc_matches = (both.withColumn("_rn", F.row_number().over(wd))
-                   .filter(F.col("_rn") == 1).drop("_rn", "_prio")) \
-        .localCheckpoint(eager=True)  # feeds CC + consensus + rescue + output
+                   .filter(F.col("_rn") == 1).drop("_rn", "_prio"))
+    return {"doc_matches": keep("doc_matches", doc_matches),
+            # appendable historic gazetteer rows (migrations/029
+            # analog, per cmd/bulk-historic-uprns)
+            "historic_gazetteer": keep(
+                "historic_gazetteer",
+                C.historic_uprn_records(docs_n, gazp, missing=missing))}
 
-    # --- phase: connected components + consensus corrections + G2 rescue
-    edges = build_edges(doc_matches, docs_n)
-    comps = connected_components(edges)
-    consensus = cluster_consensus(comps, doc_matches, docs_n)
+
+def p6_cluster(f, cfg, keep):
+    """Connected components, consensus corrections, G2 rescue (and G3
+    when enabled), one row per doc, canonical UPRN per cluster, and the
+    decision histogram (A1)."""
     from .operators.rescue import group_fuzzy_rescue
+    docs_n, doc_matches, gazp = (f["docs_normalized"], f["doc_matches"],
+                                 f["gazetteer_prepared"])
+    comps = connected_components(build_edges(doc_matches, docs_n))
+    consensus = cluster_consensus(comps, doc_matches, docs_n)
     rescue = group_fuzzy_rescue(docs_n, doc_matches, gazp)
     matches = doc_matches.unionByName(
         consensus.withColumn("score", F.col("confidence")),
@@ -258,11 +268,9 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
         rescue.withColumn("score", F.col("confidence")),
         allowMissingColumns=True)
     if cfg.enable_llm_golden:
-        # G3 (reference applyGroupLLMMatching, main.go:1992-2213; the
-        # phase the reference ships hard-disabled). Docs already
-        # corrected by consensus/rescue are excluded — the reference's
-        # address_match_corrected anti-join — so graph corrections
-        # keep precedence over the LLM's verdicts.
+        # G3 (reference applyGroupLLMMatching, main.go:1992-2213, which
+        # ships hard-disabled). Docs consensus/rescue corrected are
+        # excluded (the reference's address_match_corrected anti-join)
         from .operators.golden import llm_golden_record_corrections
         llm_corr = (llm_golden_record_corrections(
                         doc_matches, docs_n, gazp, llm_fn=cfg.llm_fn)
@@ -272,13 +280,10 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
         matches = matches.unionByName(
             llm_corr.withColumn("score", F.col("confidence")),
             allowMissingColumns=True)
-    # consensus/rescue only touch previously-unmatched docs, but keep a
-    # deterministic one-row-per-doc guarantee regardless
-    # min_by with negated confidence/score: ties break toward the MIN
-    # uprn, matching the doc_matches window above and phases.py p5/p6.
-    # confidence/score coalesced to 0.0 inside the ordering struct —
-    # struct NULLs sort smallest, so a NULL-scored row from an
-    # allowMissingColumns union would otherwise win keep-best.
+    # one row per doc: min_by with negated confidence/score breaks ties
+    # toward the MIN uprn, like the doc_matches window; the coalesce
+    # keeps a NULL-scored union row (struct NULLs sort smallest) from
+    # winning
     matches = (matches
                .groupBy("doc_id")
                .agg(F.min_by(
@@ -288,47 +293,80 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
                             (-F.coalesce("score", F.lit(0.0))).alias("_s"),
                             F.col("uprn").alias("_u"))).alias("_m"))
                .select("doc_id", "_m.*"))
-    clusters = canonical_uprn_per_cluster(comps, doc_matches)
-
-    # --- outputs: final matched docs with spans preserved (invariant),
-    #     audit candidates, run metrics (A1)
-    result = (docs_n
-              .select("doc_id", "spans", "span_fp", "raw_address",
-                      "addr_can", "postcode", "group_key")
-              .join(matches, "doc_id", "left"))
-    metrics = (decided_narrow.groupBy("decision")
+    metrics = (f["decisions"].groupBy("decision")
                .agg(F.count("*").alias("n"),
                     F.avg("score").alias("avg_score")))
-    out_extra = {}
-    if cfg.auto_tune:
-        out_extra["tuning"] = spark.createDataFrame(
-            [(float(o["threshold"]), int(o["tp"]), int(o["fp"]),
-              int(o["fn"]), float(o["precision"]), float(o["recall"]),
-              float(o["f1"])) for o in tuned["sweep"]],
-            "threshold double, tp long, fp long, fn long, "
-            "precision double, recall double, f1 double")
-        out_extra["thresholds_used"] = thresholds
-    return {
-        **out_extra,
-        "docs_normalized": docs_n,
-        "unique_addresses": uaddr,
-        "gazetteer_prepared": gazp,
-        # appendable historic gazetteer rows (migrations/029 analog):
-        # at scale this is the Iceberg append that pre-populates missing
-        # UPRNs before the next run, per cmd/bulk-historic-uprns
-        "historic_gazetteer": C.historic_uprn_records(docs_n, gazp,
-                                                      missing=missing),
-        "candidates": cands,
-        # scored keep-best pairs (post keep_best_per_uprn, pre-decide):
-        # the decision phase's exact input, exposed so audits / the
-        # linkage_fuzzy oracle can replay decide() from persisted data
-        "scored_pairs": best,
-        "audit_candidates": decided,
-        "doc_matches": doc_matches,
-        "consensus": consensus,
-        "components": comps,
-        "clusters": clusters,
-        "matches": matches,
-        "result": result,
-        "metrics": metrics,
-    }
+    return {"components": comps, "consensus": consensus,
+            "matches": keep("matches", matches),
+            "clusters": keep("clusters",
+                             canonical_uprn_per_cluster(comps, doc_matches)),
+            "metrics": keep("metrics", metrics)}
+
+
+# (phase name, phase function, the tables the phase persists)
+PHASES = (
+    ("p1_gazetteer", p1_gazetteer, ("gazetteer_prepared",)),
+    ("p2_normalize", p2_normalize, ("docs_normalized", "unique_addresses")),
+    ("p3_candidates", p3_candidates, ("candidates",)),
+    ("p4_scoring", p4_scoring, ("scored_pairs", "audit_candidates")),
+    ("p5_matches", p5_matches, ("doc_matches", "historic_gazetteer")),
+    ("p6_cluster", p6_cluster, ("matches", "clusters", "metrics")),
+)
+
+
+class InMemory:
+    """Cache the frames later phases re-scan; eagerly localCheckpoint
+    the frames several consumers read: candidates (it also truncates
+    the seven-join-tree plan every later action would re-analyze),
+    decisions, missing legacy UPRNs, doc_matches, and scored_pairs
+    under auto_tune (shared by the probe and the real decision)."""
+
+    CACHE = frozenset({"gazetteer_prepared", "docs_normalized",
+                       "unique_addresses"})
+
+    def __init__(self, cfg: PipelineConfig):
+        self.checkpoint = {"candidates", "decisions",
+                           "missing_legacy_uprns", "doc_matches"}
+        if cfg.auto_tune:
+            self.checkpoint.add("scored_pairs")
+
+    def run_phase(self, phase: str, tables: tuple, compute) -> dict:
+        return compute()
+
+    def keep(self, phase: str, name: str, df: DataFrame) -> DataFrame:
+        if name in self.CACHE:
+            return df.cache()
+        if name in self.checkpoint:
+            return df.localCheckpoint(eager=True)
+        return df
+
+
+def run_graph(frames: dict, cfg: PipelineConfig, mat: InMemory) -> dict:
+    """Run PHASES with materializer ``mat`` over ``frames`` (``docs``,
+    ``gaz``, any phase tables already held); returns every frame."""
+    f = dict(frames)
+    for phase, fn, tables in PHASES:
+        if not all(t in f for t in tables):
+            f.update(mat.run_phase(phase, tables, partial(
+                fn, f, cfg, partial(mat.keep, phase))))
+    # final matched docs with spans preserved (invariant)
+    f["result"] = (f["docs_normalized"]
+                   .select("doc_id", "spans", "span_fp", "raw_address",
+                           "addr_can", "postcode", "group_key")
+                   .join(f["matches"], "doc_id", "left"))
+    return {k: v for k, v in f.items() if k not in ("docs", "gaz")}
+
+
+def run_pipeline(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
+                 cfg: PipelineConfig | None = None,
+                 gazp_prepared: DataFrame | None = None) -> dict[str, DataFrame]:
+    """gazp_prepared: an already-prepared (prepare_gazetteer) frame —
+    callers that run the pipeline repeatedly over the same gazetteer
+    (streaming foreachBatch, threshold sweeps) prepare + persist it
+    ONCE and pass it here instead of paying normalization + range
+    expansion per run."""
+    cfg = cfg or PipelineConfig()
+    frames = {"docs": docs, "gaz": gaz}
+    if gazp_prepared is not None:
+        frames["gazetteer_prepared"] = gazp_prepared
+    return run_graph(frames, cfg, InMemory(cfg))

@@ -1,23 +1,15 @@
-"""Phased, resumable pipeline runner (north_rule: resumable from
-checkpoint with per-partition lineage + metrics).
+"""Phased, resumable pipeline runner: the phase graph of
+``run_pipeline`` (``pipeline.PHASES``, which lists each phase's tables)
+under a warehouse materializer.
 
 The reference runs layers 0-4 with a snapshot table per layer
 (cmd/matcher-v2/main.go:3389-3421); a crash resumes from the last
-snapshot. Ours: each phase writes its output table(s) to the
-Warehouse (Iceberg snapshots when available, versioned parquet +
-manifest otherwise) and records a phase-commit; `run_phased` skips
-phases whose commit exists. Every persisted table carries lineage
-columns: run_id, phase, written-at partition id, and the engine
-version — enough to trace any output row back to the task that
-produced it.
-
-Phases:
-  p1_gazetteer   -> gazetteer_prepared
-  p2_normalize   -> docs_normalized, unique_addresses
-  p3_candidates  -> candidates
-  p4_scoring     -> audit_candidates (scored + decided + lineage)
-  p5_matches     -> doc_matches
-  p6_cluster     -> matches, clusters, metrics
+snapshot. Here each phase writes its tables to the Warehouse (Iceberg
+snapshots when available, versioned parquet + manifest otherwise),
+reads them back for the phases after it and records a phase-commit;
+`run_phased` skips committed phases. Every persisted table carries
+lineage columns (run_id, phase, written-at partition id, engine
+version) that trace any output row back to the task that wrote it.
 """
 
 from __future__ import annotations
@@ -27,16 +19,10 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import __version__
-from ..functions.symspell import build_dictionary_from_gazetteer
-from ..operators import candidates as C
-from ..operators import decision as D
-from ..operators import scoring as S
-from ..operators.blocking import with_blocking_keys
-from ..operators.cluster import (build_edges, canonical_uprn_per_cluster,
-                                 cluster_consensus, connected_components)
-from ..operators.rescue import group_fuzzy_rescue
-from ..pipeline import PipelineConfig, normalize_documents
+from ..pipeline import PHASES, InMemory, PipelineConfig, run_graph
 from ..sources.catalog import Warehouse
+
+TABLES = frozenset(t for _, _, tables in PHASES for t in tables)
 
 
 def with_lineage(df: DataFrame, run_id: str, phase: str) -> DataFrame:
@@ -56,228 +42,51 @@ def strip_lineage(df: DataFrame) -> DataFrame:
                    "_engine_version", "_written_at")
 
 
+class WarehouseMaterializer(InMemory):
+    """Phase tables go through the Warehouse: saved with lineage, then
+    read back, so every later step (the decision included) reads the
+    snapshot rather than re-running the lazy plan behind it. Frames
+    that are not tables keep the in-memory policy."""
+
+    def __init__(self, cfg: PipelineConfig, wh: Warehouse, run_id: str,
+                 force: bool):
+        super().__init__(cfg)
+        self.wh, self.run_id, self.force = wh, run_id, force
+
+    def _load(self, name: str) -> DataFrame:
+        df = strip_lineage(self.wh.load(name))
+        return df.cache() if name in self.CACHE else df
+
+    def run_phase(self, phase: str, tables: tuple, compute) -> dict:
+        # resume only if EVERY table exists: an older engine version's
+        # commit may list fewer tables (p4 before scored_pairs existed)
+        if (not self.force and self.wh.phase_done(phase)
+                and all(self.wh.exists(t) for t in tables)):
+            out = {t: self._load(t) for t in tables}
+            if "audit_candidates" in out:   # carries every decision column
+                out["decisions"] = out["audit_candidates"]
+            return out
+        out = compute()
+        self.wh.commit_phase(phase, list(tables))
+        return out
+
+    def keep(self, phase: str, name: str, df: DataFrame) -> DataFrame:
+        if name not in TABLES:
+            return super().keep(phase, name, df)
+        self.wh.save(with_lineage(df, self.run_id, phase), name)
+        return self._load(name)
+
+
 def run_phased(spark: SparkSession, docs: DataFrame, gaz: DataFrame,
                wh: Warehouse, run_id: str | None = None,
                cfg: PipelineConfig | None = None,
                force: bool = False) -> dict[str, DataFrame]:
     """Run (or resume) the pipeline phase by phase through the
     Warehouse. A phase whose commit marker exists is NOT recomputed —
-    its table is read back (Iceberg snapshot / parquet version)."""
+    its tables are read back (Iceberg snapshot / parquet version), so a
+    resumed p4 returns no ``tuning``/``thresholds_used`` and a resumed
+    p6 no ``components``/``consensus``; ``force`` recomputes all."""
     cfg = cfg or PipelineConfig()
-    run_id = run_id or f"run-{int(time.time())}"
-
-    def phase(name: str, compute, tables: dict[str, "callable"]):
-        """tables: output-name -> thunk returning the DataFrame."""
-        # Resume only if EVERY requested table exists: a warehouse
-        # committed by an older engine version may carry the phase
-        # marker but fewer output tables (e.g. p4 before scored_pairs
-        # existed) — loading would crash mid-resume, so recompute the
-        # phase instead.
-        if (not force and wh.phase_done(name)
-                and all(wh.exists(t) for t in tables)):
-            return {t: strip_lineage(wh.load(t)) for t in tables}
-        out = {}
-        computed = compute()
-        for tname, sel in tables.items():
-            df = sel(computed)
-            wh.save(with_lineage(df, run_id, name), tname)
-            out[tname] = strip_lineage(wh.load(tname))
-        wh.commit_phase(name, list(tables))
-        return out
-
-    # -- p1: gazetteer prep
-    p1 = phase("p1_gazetteer",
-               lambda: C.prepare_gazetteer(gaz),
-               {"gazetteer_prepared": lambda g: g})
-    gazp = p1["gazetteer_prepared"].cache()
-
-    # -- p2: document normalization + unique addresses
-    def _p2():
-        sym = build_dictionary_from_gazetteer(gazp, addr_col="addr_core") \
-            if cfg.enable_symspell else None
-        dn = normalize_documents(docs, sym).cache()
-        ua = with_blocking_keys(C.prepare_unique_addresses(dn))
-        return {"dn": dn, "ua": ua}
-
-    p2 = phase("p2_normalize", _p2,
-               {"docs_normalized": lambda x: x["dn"],
-                "unique_addresses": lambda x: x["ua"]})
-    docs_n = p2["docs_normalized"].cache()
-    uaddr = p2["unique_addresses"].cache()
-
-    # -- p3: candidate generation
-    def _p3():
-        gens = [C.cand_exact_canonical(uaddr, gazp),
-                C.cand_blocked(uaddr, gazp, cfg.hot_key_threshold,
-                               cfg.n_salt),
-                C.cand_rule_rewrite(uaddr, gazp),
-                C.cand_component_joins(uaddr, gazp)]
-        if cfg.enable_spatial:
-            gens.append(C.cand_spatial(uaddr, gazp, cfg.spatial_radius_m))
-        if cfg.enable_vector and "embedding" in gazp.columns:
-            # honor cfg.vector_mode exactly like pipeline.py: the IVF
-            # path exists for gazetteers too large to collect/broadcast,
-            # and the two runners must produce the same candidate set.
-            if cfg.vector_mode == "ivf":
-                gens.append(C.cand_vector_ivf(uaddr, gazp,
-                                              top_k=cfg.vector_top_k,
-                                              min_sim=cfg.vector_min_sim,
-                                              n_cells=cfg.ivf_cells,
-                                              n_probe=cfg.ivf_probe))
-            else:
-                gens.append(C.cand_vector(uaddr, gazp, 0,
-                                          cfg.vector_top_k,
-                                          cfg.vector_min_sim))
-        # J5 hierarchical cascade LAST, mirroring pipeline.py: a doc
-        # matchable ONLY via the phonetic/locality levels (no postcode,
-        # trigram-block-defeating typo) must match identically under
-        # both runners (round-4 verdict: the phased runner silently
-        # omitted this generator).
-        gens.append(C.cand_hierarchical(uaddr, gazp))
-        return C.union_candidates(*gens)
-
-    p3 = phase("p3_candidates", _p3, {"candidates": lambda c: c})
-    cands = p3["candidates"]
-
-    # -- p4: scoring + decision. The scored keep-best pairs are a
-    # snapshot table of their own: they are the decision phase's exact
-    # input, so a resumed run can re-decide with NEW thresholds (or an
-    # auditor can replay the ladder — the composed linkage_full/
-    # linkage_phased oracle does exactly that) without re-running
-    # candidate generation + the Arrow scoring UDF, the expensive 90%
-    # of the phase (reference layer-resume semantics,
-    # cmd/matcher-v2/main.go:3389-3421).
-    def _p4():
-        pairs = S.attach_pair_attrs(cands, uaddr, gazp)
-        pairs = S.prefilter_pairs(S.with_column_features(pairs))
-        pairs = S.with_score(S.with_pair_features(pairs),
-                             scorer=cfg.scorer)
-        best = D.keep_best_per_uprn(D.narrow_for_decision(pairs))
-        dec = D.decide(best, cfg.thresholds, cfg.top_k_audit)
-        # d_core/g_core ride DECISION_COLS — no second attach join
-        return {"best": best, "dec": S.with_audit_levenshtein(dec)}
-
-    p4 = phase("p4_scoring", _p4,
-               {"scored_pairs": lambda x: x["best"],
-                "audit_candidates": lambda x: x["dec"]})
-    decided = p4["audit_candidates"]
-
-    # -- p5: fan-out + legacy/historic overrides. _det=1 marks the
-    # deterministic UPRN-validated paths so they beat a perfect fuzzy
-    # match (which also reaches confidence 1.0) in the max_by ordering
-    # — same precedence fix as pipeline.py's _prio window. The created
-    # historic gazetteer rows persist as their own warehouse table
-    # (the Iceberg-append analog of migrations/029).
-    def _p5():
-        acc = D.accepted(decided).select(
-            "addr_id", "uprn", "score", "confidence",
-            F.array_join("methods", "+").alias("method"))
-        doc_addr = docs_n.join(
-            uaddr.select("addr_can", "postcode", "addr_id"),
-            ["addr_can", "postcode"], "left")
-        fuzzy_doc = doc_addr.join(acc, "addr_id").select(
-            "doc_id", "uprn", "method", "score", "confidence") \
-            .withColumn("_det", F.lit(0))
-        legacy = C.legacy_uprn_matches(docs_n, gazp) \
-            .withColumn("confidence", F.lit(1.0)) \
-            .withColumn("_det", F.lit(1))
-        # one distinct+anti-join for BOTH historic outputs (matches +
-        # appendable gazetteer rows) — at a 10^8-row gazetteer the
-        # distinct is the cost, so it must not run once per consumer
-        missing = C.missing_legacy_uprns(docs_n, gazp) \
-            .localCheckpoint(eager=True)
-        historic = C.historic_uprn_matches(docs_n, gazp, missing=missing) \
-            .withColumn("confidence", F.lit(1.0)) \
-            .withColumn("_det", F.lit(1))
-        both = legacy.unionByName(historic).unionByName(fuzzy_doc)
-        # min_by with negated det/confidence/score so exact ties break
-        # toward the MIN uprn — the same precedence pipeline.py's
-        # window (asc(_prio), desc(conf), desc(score), asc(uprn))
-        # implements; max_by over (…, uprn) silently preferred the MAX
-        # uprn on ties, breaking phased-vs-monolithic parity
-        # confidence/score coalesced to 0.0 INSIDE the ordering struct:
-        # struct comparison treats NULL as smallest, so a NULL-scored
-        # row (possible via allowMissingColumns unions) would otherwise
-        # sort first under the negated keys and WIN keep-best
-        dm = (both.groupBy("doc_id")
-              .agg(F.min_by(F.struct("uprn", "method", "score",
-                                     "confidence"),
-                            F.struct((-F.col("_det")).alias("_d"),
-                                     (-F.coalesce("confidence",
-                                                  F.lit(0.0))).alias("_c"),
-                                     (-F.coalesce("score",
-                                                  F.lit(0.0))).alias("_s"),
-                                     F.col("uprn").alias("_u")))
-                   .alias("_m"))
-              .select("doc_id", "_m.*"))
-        return {"doc_matches": dm,
-                "historic_gazetteer":
-                    C.historic_uprn_records(docs_n, gazp,
-                                            missing=missing)}
-
-    p5 = phase("p5_matches", _p5,
-               {"doc_matches": lambda x: x["doc_matches"],
-                "historic_gazetteer": lambda x: x["historic_gazetteer"]})
-    doc_matches = p5["doc_matches"].cache()
-
-    # -- p6: clustering + consensus + rescue + metrics
-    def _p6():
-        comps = connected_components(build_edges(doc_matches, docs_n))
-        consensus = cluster_consensus(comps, doc_matches, docs_n)
-        rescue = group_fuzzy_rescue(docs_n, doc_matches, gazp)
-        matches = (doc_matches
-                   .unionByName(consensus.withColumn("score",
-                                                     F.col("confidence")),
-                                allowMissingColumns=True)
-                   .unionByName(rescue.withColumn("score",
-                                                  F.col("confidence")),
-                                allowMissingColumns=True))
-        if cfg.enable_llm_golden:
-            # G3 golden-record corrections, mirroring pipeline.py
-            # exactly (same anti-joins: graph corrections keep
-            # precedence over LLM verdicts). The phased runner must
-            # honor every cfg switch the monolithic runner does — the
-            # round-4 verdict's J5 omission was this same bug class.
-            from ..operators.golden import llm_golden_record_corrections
-            llm_corr = (llm_golden_record_corrections(
-                            doc_matches, docs_n, gazp, llm_fn=cfg.llm_fn)
-                        .join(consensus.select("doc_id"), "doc_id",
-                              "left_anti")
-                        .join(rescue.select("doc_id"), "doc_id",
-                              "left_anti"))
-            matches = matches.unionByName(
-                llm_corr.withColumn("score", F.col("confidence")),
-                allowMissingColumns=True)
-        matches = (matches.groupBy("doc_id")
-                   .agg(F.min_by(F.struct("uprn", "method", "score",
-                                          "confidence"),
-                                 F.struct((-F.coalesce(
-                                     "confidence", F.lit(0.0))).alias("_c"),
-                                          (-F.coalesce(
-                                              "score",
-                                              F.lit(0.0))).alias("_s"),
-                                          F.col("uprn").alias("_u")))
-                        .alias("_m"))
-                   .select("doc_id", "_m.*"))
-        clusters = canonical_uprn_per_cluster(comps, doc_matches)
-        metrics = (decided.groupBy("decision")
-                   .agg(F.count("*").alias("n"),
-                        F.avg("score").alias("avg_score")))
-        return {"matches": matches, "clusters": clusters, "metrics": metrics}
-
-    p6 = phase("p6_cluster", _p6,
-               {"matches": lambda x: x["matches"],
-                "clusters": lambda x: x["clusters"],
-                "metrics": lambda x: x["metrics"]})
-
-    return {
-        "gazetteer_prepared": gazp,
-        "docs_normalized": docs_n,
-        "unique_addresses": uaddr,
-        "candidates": cands,
-        "scored_pairs": p4["scored_pairs"],
-        "audit_candidates": decided,
-        "doc_matches": doc_matches,
-        "historic_gazetteer": p5["historic_gazetteer"],
-        **p6,
-    }
+    mat = WarehouseMaterializer(cfg, wh, run_id or f"run-{int(time.time())}",
+                                force)
+    return run_graph({"docs": docs, "gaz": gaz}, cfg, mat)

@@ -104,13 +104,7 @@ def main() -> int:
     if args.export:
         from ehdc_llpg_address_matching_spark.operators.facts import (
             build_fact, export_enhanced)
-        from ehdc_llpg_address_matching_spark.sources.documents import \
-            with_raw_address
-        result = (out["docs_normalized"]
-                  .select("doc_id", "raw_address", "addr_can", "postcode",
-                          "group_key")
-                  .join(out["matches"], "doc_id", "left"))
-        export_enhanced(build_fact(result, out["gazetteer_prepared"]),
+        export_enhanced(build_fact(out["result"], out["gazetteer_prepared"]),
                         args.export)
         print(f"export written to {args.export}")
     return 0

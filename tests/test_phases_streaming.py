@@ -7,8 +7,10 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from ehdc_llpg_address_matching_spark.pipeline import PipelineConfig
-from ehdc_llpg_address_matching_spark.plans.phases import run_phased
+from ehdc_llpg_address_matching_spark.pipeline import (PipelineConfig,
+                                                       run_pipeline)
+from ehdc_llpg_address_matching_spark.plans.phases import (run_phased,
+                                                           strip_lineage)
 from ehdc_llpg_address_matching_spark.sources.catalog import Warehouse
 from ehdc_llpg_address_matching_spark.streaming.ingest import (
     read_document_stream, start_incremental_linkage, windowed_event_counts)
@@ -16,6 +18,26 @@ from ehdc_llpg_address_matching_spark.synth import SynthConfig, synth_tables
 
 CFG = PipelineConfig(enable_vector=False, enable_spatial=False,
                      enable_symspell=False)
+# the decision columns of the audit table
+DECISION = ["addr_id", "uprn", "methods", "score", "rank", "margin",
+            "decision", "confidence"]
+
+
+def _rows(df, cols=None):
+    """Sorted JSON digest of ``df``'s rows over ``cols`` (default: all,
+    by name): doubles rounded to 9 places, arrays sorted, so neither
+    partitioning nor summation order shows."""
+    from pyspark.sql.types import ArrayType, DoubleType, FloatType
+    sel = []
+    for fld in df.select(*sorted(cols or df.columns)).schema.fields:
+        c = F.col(fld.name)
+        if isinstance(fld.dataType, (DoubleType, FloatType)):
+            c = F.round(c, 9)
+        elif isinstance(fld.dataType, ArrayType):
+            c = F.array_sort(c)
+        sel.append(c.alias(fld.name))
+    return sorted(r[0] for r in
+                  df.select(F.to_json(F.struct(*sel))).collect())
 
 
 @pytest.fixture(scope="module")
@@ -193,7 +215,9 @@ def test_stream_static_candidate_join(spark, tmp_path, corpus):
 
 def test_phased_matches_monolithic_parity(spark, tmp_path, corpus):
     """The phased runner and the monolithic run_pipeline must emit
-    IDENTICAL doc->uprn assignments, including on exact score ties —
+    IDENTICAL outputs — candidates, scored pairs, the audit table's
+    decisions, doc matches, historic gazetteer rows, clusters, metrics
+    and doc->uprn assignments — including on exact score ties —
     round-4 fix: p5/p6's keep-best used max_by over (…, uprn) (max
     uprn wins ties) while the monolithic precedence window picks the
     MIN uprn; both now break ties toward the minimum uprn.
@@ -210,7 +234,6 @@ def test_phased_matches_monolithic_parity(spark, tmp_path, corpus):
     exact-canonical misses too — verified empirically: the union of
     all non-hier generators yields ZERO candidates for this address,
     while the J5 cascade matches it at street+house level (0.90)."""
-    from ehdc_llpg_address_matching_spark.pipeline import run_pipeline
     from ehdc_llpg_address_matching_spark.synth import (DOCS_SPARK_SCHEMA,
                                                         GAZ_SPARK_SCHEMA)
     docs, gaz, _ = corpus
@@ -238,6 +261,13 @@ def test_phased_matches_monolithic_parity(spark, tmp_path, corpus):
     assert ("DHIER01", "999000001") in mm
     assert ("DHIER01", "999000001") in mp
     assert mp == mm
+    # every other output the two runners share, row for row
+    for name, cols in (("candidates", None), ("scored_pairs", None),
+                       ("audit_candidates", DECISION),
+                       ("doc_matches", None), ("historic_gazetteer", None),
+                       ("clusters", None), ("metrics", None),
+                       ("matches", None)):
+        assert _rows(out_p[name], cols) == _rows(out_m[name], cols), name
 
 
 def test_phased_resume_recomputes_phase_missing_a_table(spark, tmp_path,
@@ -269,9 +299,6 @@ def test_phased_honors_ivf_vector_mode(spark, tmp_path):
     IVF exists for, that collects the full embedding matrix to the
     driver). n_probe = n_cells makes IVF exact, so phased-IVF matches
     must equal monolithic-IVF matches, with vector candidates present."""
-    from ehdc_llpg_address_matching_spark.pipeline import run_pipeline
-    from ehdc_llpg_address_matching_spark.synth import (SynthConfig,
-                                                        synth_tables)
     cfg = PipelineConfig(vector_mode="ivf", ivf_cells=8, ivf_probe=8,
                          enable_spatial=False, enable_symspell=False)
     sgaz, sdocs, _ = synth_tables(SynthConfig(seed=13, n_gazetteer=120,
@@ -289,3 +316,46 @@ def test_phased_honors_ivf_vector_mode(spark, tmp_path):
                .select(F.explode("methods").alias("m"))
                .select("m").distinct().toPandas().m.tolist())
     assert "vector" in methods
+
+
+def test_phased_honors_auto_tune(spark, tmp_path):
+    """PipelineConfig.auto_tune under the phased runner: the same tuning
+    sweep and adopted thresholds as run_pipeline, the persisted audit
+    table carries the tuned decisions, and the matches agree."""
+    sgaz, sdocs, _ = synth_tables(SynthConfig(seed=13, n_gazetteer=250,
+                                              n_docs=400, historic_frac=0.0))
+    d, g = spark.createDataFrame(sdocs), spark.createDataFrame(sgaz)
+    cfg = PipelineConfig(auto_tune=True)
+    wh = Warehouse(spark, str(tmp_path / "wh_tune"))
+    out_p = run_phased(spark, d, g, wh, run_id="rt", cfg=cfg)
+    out_m = run_pipeline(spark, d, g, cfg)
+    assert out_p["thresholds_used"] == out_m["thresholds_used"]
+    assert _rows(out_p["tuning"]) == _rows(out_m["tuning"])
+    assert (_rows(strip_lineage(wh.load("audit_candidates")), DECISION)
+            == _rows(out_m["audit_candidates"], DECISION))
+    assert (_rows(out_p["matches"], ["doc_id", "uprn"])
+            == _rows(out_m["matches"], ["doc_id", "uprn"]))
+
+
+class _PlanRecordingWarehouse(Warehouse):
+    """Records the optimized logical plan of every saved table."""
+
+    def __init__(self, spark, root):
+        super().__init__(spark, root)
+        self.plans = {}
+
+    def save(self, df, name, mode="overwrite", partition_by=None):
+        self.plans[name] = df._jdf.queryExecution().optimizedPlan().toString()
+        super().save(df, name, mode, partition_by)
+
+
+def test_phased_p4_scores_once(spark, tmp_path, corpus):
+    """The Arrow pair-feature UDF (_feat) runs for the scored_pairs
+    table only: the decision, the audit table and everything after read
+    the saved scored pairs instead of re-running the scoring plan."""
+    docs, gaz, _ = corpus
+    wh = _PlanRecordingWarehouse(spark, str(tmp_path / "wh_plans"))
+    run_phased(spark, docs, gaz, wh, run_id="rs", cfg=CFG)
+    assert len(wh.plans) == 11
+    assert [t for t, p in wh.plans.items() if "_feat" in p] == \
+        ["scored_pairs"]
